@@ -1,8 +1,12 @@
 from .introspect import (  # noqa: F401
-    assert_operators,
+    PlanNode,
     broadcast_join_count,
+    executed_plan,
     operators_in_plan,
     plan_string,
     pushed_filters,
+    scan_passes,
+    scans_under_broadcast,
     shuffle_count,
+    walk_plan,
 )

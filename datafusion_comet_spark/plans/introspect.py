@@ -1,29 +1,212 @@
-"""Physical-plan introspection.
+"""Physical-plan introspection: one py4j walk of the executed plan.
 
 The reference proves which operator served a query via
 ``checkSparkAnswerAndOperator`` (reference:
 spark/src/test/scala/org/apache/spark/sql/CometTestBase.scala:225-268)
-and commits approved plans per query in its plan-stability suite
-(test/.../CometPlanStabilitySuite.scala:78-125).  The rebuild keeps
-the idea but parses Spark's own explain output: assert that the
-expected physical operators (and only those) executed, that filters
-reached the parquet scan, and that joins picked the intended strategy.
+and reads per-operator facts from the plan tree (``CometMetricNode``).
+The rebuild walks ``df._jdf.queryExecution().executedPlan()`` into a
+small tree of :class:`PlanNode`; every plan assertion (operator
+sequences, shuffles, pushed filters, scan passes, skew splits) asks that
+tree, never ``explain()`` text.  Walk rules:
 
-Parsing is deliberately minimal — operator names only — because
-explain formatting varies between Spark versions (SURVEY.md §7.4.5).
+- ``AdaptiveSparkPlanExec`` -> ``executedPlan()``: the initial plan
+  before execution, the final one after.  Never ``finalPhysicalPlan``,
+  which executes the query.
+- ``*QueryStageExec`` -> ``plan()``; ``WholeStageCodegenExec`` and
+  ``InputAdapter`` are transparent.
+- every other node -> ``innerChildren()`` (subqueries, an
+  ``InMemoryRelation``'s cached plan — walked once per relation and
+  shared wherever it is read) then ``children()``, as Spark prints them.
+- ``ReusedExchange`` and ``ReusedSubquery`` are leaves.
+
+Walking starts no Spark job, so it is safe before ``collect()`` and
+outside timed regions.  ``plan_string`` is display only.
 """
 
 from __future__ import annotations
 
-import re
+from collections.abc import Iterator
+from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Any
 
+from pyspark import SparkContext
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame
 
-_OP_LINE = re.compile(r"^\s*(?:[+:*!\-(\d)\s]*)([A-Za-z][A-Za-z0-9]+)")
+_TRANSPARENT = {"WholeStageCodegenExec", "InputAdapter"}
+_REUSED = {"ReusedExchangeExec", "ReusedSubqueryExec"}
+_HASH_OR_RANGE = {"HashPartitioning", "RangePartitioning"}
+_SCAN, _SHUFFLE = "FileSourceScanExec", "ShuffleExchangeExec"
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.length())]
+
+
+def _columns(jexpr) -> list[str]:
+    return [a.name() for a in _seq(jexpr.references().toSeq())]
+
+
+@dataclass(eq=False)
+class PlanNode:
+    """One operator: ``name`` as Spark prints it (``FileScan``,
+    ``Exchange`` ...), ``cls`` its JVM class, ``subplans`` its inner
+    children, ``children`` its inputs.  Other facts are read from
+    ``jnode`` on first use."""
+
+    name: str
+    cls: str
+    jnode: Any = field(repr=False)
+    subplans: list[PlanNode] = field(default_factory=list, repr=False)
+    children: list[PlanNode] = field(default_factory=list, repr=False)
+
+    def walk(self, distinct: bool = False) -> Iterator[PlanNode]:
+        """Pre-order: node, subplans, children.  A shared cached subtree
+        is yielded wherever it is read, or once with ``distinct``."""
+        seen: set[int] = set()
+        stack = [self]
+        while stack:
+            node = stack.pop()
+            if distinct and id(node) in seen:
+                continue
+            seen.add(id(node))
+            yield node
+            stack.extend(reversed(node.subplans + node.children))
+
+    @cached_property
+    def table(self) -> str | None:
+        """Table a file scan reads (its root path's base name)."""
+        if self.cls != _SCAN:
+            return None
+        root = self.jnode.relation().location().rootPaths().apply(0)
+        return root.getName().split(".")[0]
+
+    @cached_property
+    def read_schema(self) -> list[str]:
+        """Top-level columns a file scan reads (``requiredSchema``)."""
+        if self.cls != _SCAN:
+            return []
+        return list(self.jnode.requiredSchema().fieldNames())
+
+    @cached_property
+    def pushed_filters(self) -> list[str]:
+        """Filters pushed into a file scan; before a scalar subquery in
+        them has run, the filters using it are left out."""
+        if self.cls != _SCAN:
+            return []
+        try:
+            filters = _seq(self.jnode.pushedDownFilters())
+        except IllegalArgumentException:  # the subquery has not run
+            pkg = SparkContext._jvm.org.apache.spark.sql.execution.datasources
+            strategy = getattr(getattr(pkg, "DataSourceStrategy$"), "MODULE$")
+            filters = [
+                o.get()
+                for e in _seq(self.jnode.dataFilters())
+                if (o := strategy.translateFilter(e, True)).isDefined()
+            ]
+        return [f.toString() for f in filters]
+
+    @cached_property
+    def partitioning(self) -> str | None:
+        """A shuffle's partitioning: ``HashPartitioning``,
+        ``RangePartitioning``, ``SinglePartition`` ..."""
+        if self.cls != _SHUFFLE:
+            return None
+        kind = self.jnode.outputPartitioning().getClass().getSimpleName()
+        return kind.rstrip("$")
+
+    @cached_property
+    def partition_keys(self) -> list[str]:
+        if self.cls != _SHUFFLE:
+            return []
+        return _columns(self.jnode.outputPartitioning())
+
+    @cached_property
+    def join_type(self) -> str | None:
+        if not self.cls.endswith("JoinExec"):
+            return None
+        return self.jnode.joinType().toString()
+
+    @cached_property
+    def join_keys(self) -> list[str]:
+        """Columns an equi-join's left keys use."""
+        if self.join_type is None or self.cls == "BroadcastNestedLoopJoinExec":
+            return []
+        return [c for k in _seq(self.jnode.leftKeys()) for c in _columns(k)]
+
+    @cached_property
+    def expression_classes(self) -> set[str]:
+        """JVM classes of every (sub-)expression the operator evaluates,
+        e.g. ``ArrayTransform`` or ``DynamicPruningExpression``."""
+        out: set[str] = set()
+        stack = _seq(self.jnode.expressions())
+        while stack:
+            e = stack.pop()
+            out.add(e.getClass().getSimpleName())
+            stack.extend(_seq(e.children()))
+        return out
+
+    @cached_property
+    def skew_join(self) -> bool:
+        """True on a shuffled join AQE re-planned with skew splits."""
+        if self.cls not in ("SortMergeJoinExec", "ShuffledHashJoinExec"):
+            return False
+        return bool(self.jnode.isSkewJoin())
+
+    @cached_property
+    def metrics(self) -> dict[str, int]:
+        """The node's SQLMetrics, name -> value."""
+        m = self.jnode.metrics()
+        keys = m.keySet().mkString("\x01")
+        return {k: m.apply(k).value() for k in keys.split("\x01") if k}
+
+
+def _name(jnode, cls: str) -> str:
+    # explain prints a file scan as "FileScan <format>": nodeNamePrefix
+    # "File" + nodeName "Scan <format> <table>"; a skew-split join's
+    # nodeName is "SortMergeJoin(skew=true)"
+    if cls == _SCAN:
+        return "FileScan"
+    return jnode.nodeName().split(" ", 1)[0].split("(", 1)[0]
+
+
+def walk_plan(jplan) -> PlanNode:
+    """Walk a JVM plan (physical or logical) into a :class:`PlanNode`."""
+    cached: dict[int, PlanNode] = {}
+
+    def visit(j) -> PlanNode:
+        cls = j.getClass().getSimpleName()
+        while cls in _TRANSPARENT:
+            j = j.child()
+            cls = j.getClass().getSimpleName()
+        node = PlanNode(_name(j, cls), cls, j)
+        if cls == "AdaptiveSparkPlanExec":
+            node.children = [visit(j.executedPlan())]
+        elif cls.endswith("QueryStageExec"):
+            node.children = [visit(j.plan())]
+        elif cls == "InMemoryRelation":
+            plan = j.cachedPlan()
+            key = SparkContext._jvm.java.lang.System.identityHashCode(plan)
+            if key not in cached:
+                cached[key] = visit(plan)
+            node.subplans = [cached[key]]
+        elif cls not in _REUSED:
+            node.subplans = [visit(c) for c in _seq(j.innerChildren())]
+            node.children = [visit(c) for c in _seq(j.children())]
+        return node
+
+    return visit(jplan)
+
+
+def executed_plan(df: DataFrame) -> PlanNode:
+    """``df``'s walked physical plan: as planned before ``collect()``,
+    AQE's final plan (stages, reuse, skew splits) after it."""
+    return walk_plan(df._jdf.queryExecution().executedPlan())
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
-    """Return the explain output for ``df`` as a string."""
+    """Return the explain output for ``df`` as a string (display only)."""
     qe = df._jdf.queryExecution()
     jvm = df.sparkSession._jvm
     jmode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
@@ -31,94 +214,52 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
 
 
 def operators_in_plan(df: DataFrame) -> list[str]:
-    """Physical operator names appearing in the simple plan, in order."""
-    text = plan_string(df, "simple")
-    ops = []
-    for line in text.splitlines():
-        m = _OP_LINE.match(line)
-        if m:
-            ops.append(m.group(1))
-    return ops
-
-
-def assert_operators(
-    df: DataFrame,
-    expected: list[str] | None = None,
-    forbidden: list[str] | None = None,
-) -> None:
-    """Assert the physical plan contains each ``expected`` operator name
-    (substring match against the plan) and none of the ``forbidden``."""
-    text = plan_string(df, "simple")
-    for op in expected or []:
-        assert op in text, f"operator {op!r} missing from plan:\n{text}"
-    for op in forbidden or []:
-        assert op not in text, f"operator {op!r} unexpectedly in plan:\n{text}"
+    """Operator names in pre-order, in the order explain prints them."""
+    return [n.name for n in executed_plan(df).walk()]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters entries from the formatted plan (parquet pushdown proof)."""
-    text = plan_string(df, "formatted")
-    out = []
-    for m in re.finditer(r"PushedFilters:\s*\[([^\]]*)\]", text):
-        body = m.group(1).strip()
-        if body:
-            out.extend(p.strip() for p in body.split(","))
-    return out
+    """Filters pushed into every parquet scan (pushdown proof)."""
+    return [
+        f for n in executed_plan(df).walk(distinct=True) for f in n.pushed_filters
+    ]
 
 
 def shuffle_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan — the scale metric to minimize."""
-    return plan_string(df, "simple").count("Exchange hashpartitioning") + plan_string(
-        df, "simple"
-    ).count("Exchange rangepartitioning")
+    """Hash and range shuffle exchanges in the plan — the scale metric to
+    minimize.  A cached plan counts once per read, as the plan prints."""
+    return sum(n.partitioning in _HASH_OR_RANGE for n in executed_plan(df).walk())
 
 
 def broadcast_join_count(df: DataFrame) -> int:
-    return plan_string(df, "simple").count("BroadcastHashJoin")
+    return sum(n.name == "BroadcastHashJoin" for n in executed_plan(df).walk())
 
 
-_SCAN_TABLE = re.compile(r"([A-Za-z_0-9]+)\.parquet")
+def scan_passes(df: DataFrame, table: str) -> int:
+    """Physical file scans of ``table``: each cached plan counts once, a
+    reused exchange or subquery not at all, and scalar-subquery scans
+    are included.  Call after ``collect()`` to count what executed."""
+    return sum(n.table == table for n in executed_plan(df).walk(distinct=True))
 
 
 def scans_under_broadcast(df: DataFrame) -> list[str]:
-    """Table names of every FileScan sitting BENEATH a BroadcastExchange
-    in the physical plan — the build sides Catalyst has committed to
-    materializing on every executor.  The 100 TB invariant
-    (tests/test_asymptotic_regime.py) is that in asymptotic mode this
-    list never names a scaling table.
+    """Tables of every file scan BENEATH a BroadcastExchange — build
+    sides materialized on every executor.  In asymptotic mode this must
+    never name a scaling table (tests/test_asymptotic_regime.py).
 
-    Subtree membership is recovered from the simple plan's indentation:
-    a node's children are the following lines whose operator name
-    starts at a deeper column; a BroadcastExchange's subtree ends at
-    the first line at or left of its own depth.
-
-    OPAQUE nodes under a broadcast are flagged, not skipped: a
-    ``ReusedExchange`` or ``InMemoryTableScan`` descendant prints no
-    FileScan of its own — its source subtree lives elsewhere in the
-    plan (or in the cache manager) — so a scaling scan could reach the
-    broadcast through one without ever appearing in this subtree.
-    Those descendants are reported as ``<opaque:OpName>`` markers so
-    the asymptotic contract test fails on them unless the composed
-    plan was adjudicated and allowlisted by name (round-11 advice:
-    cached/reused build sides must not bypass the contract).
+    A ``ReusedExchange`` (rows from elsewhere) or ``InMemoryTableScan``
+    (a cache whose lineage, walked beneath it, ran once elsewhere) under
+    a broadcast is reported as an ``<opaque:OpName>`` marker, so the
+    contract fails on it unless the composed plan was adjudicated and
+    allowlisted by name.
     """
-    lines = plan_string(df, "simple").splitlines()
-    parsed = []  # (depth, op_name, raw_line)
-    for line in lines:
-        m = _OP_LINE.match(line)
-        if m:
-            parsed.append((m.start(1), m.group(1), line))
     out: list[str] = []
-    for i, (depth, op, _line) in enumerate(parsed):
-        if op != "BroadcastExchange":
+    for b in executed_plan(df).walk():
+        if b.name != "BroadcastExchange":
             continue
-        for d2, op2, line2 in parsed[i + 1 :]:
-            if d2 <= depth:
-                break
-            if op2 == "FileScan":
-                sm = _SCAN_TABLE.search(line2)
-                if sm:
-                    out.append(sm.group(1))
-            elif op2 in ("ReusedExchange", "InMemoryTableScan"):
-                out.append(f"<opaque:{op2}>")
+        for n in (n for c in b.children for n in c.walk()):
+            if n.cls == _SCAN:
+                out.append(n.table)
+            elif n.cls in ("ReusedExchangeExec", "InMemoryTableScanExec"):
+                out.append(f"<opaque:{n.cls.removesuffix('Exec')}>")
     return out

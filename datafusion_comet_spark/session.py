@@ -38,9 +38,9 @@ DEFAULT_CONF: dict[str, str] = {
     # pure scheduling overhead.  True sizes cached partitions from bytes
     # (advisoryPartitionSizeInBytes) — 1 task at sf0.1, advisory-sized
     # at 100 TB.  Measured (dev/cached_coalesce_ab.py, interleaved
-    # min-of-9 per arm, identical rows): return_ratio_rank warm
-    # 0.951→0.660 s, cold 1.30→0.906 s; bm25_multiquery warm
-    # 0.936→0.628 s, cold 1.25→1.013 s.
+    # min-of-9 warm / min-of-3 cold per arm, identical rows):
+    # return_ratio_rank warm 0.951→0.660 s, cold 1.30→0.906 s;
+    # bm25_multiquery warm 0.936→0.628 s, cold 1.25→1.013 s.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Prefer hash join when a side is small post-AQE; mirrors the
     # reference's biggest tuned win (replaceSortMergeJoin, BASELINE.md).
@@ -61,7 +61,6 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # --- misc --------------------------------------------------------------
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": "32",
 }
 
 
@@ -86,9 +85,7 @@ def get_session(
         master or f"local[{cpus}]"
     )
     conf = dict(DEFAULT_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(
-        int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-    )
+    conf["spark.sql.shuffle.partitions"] = str(cpus)
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     conf.setdefault("spark.driver.memory", driver_mem)
     if extra_conf:

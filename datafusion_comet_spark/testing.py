@@ -201,3 +201,37 @@ def asymptotic_mode(spark, sf_dir: str):
                 _TABLE_ROW_GROUPS_CACHE.pop((sf_dir, t), None)
             else:
                 _TABLE_ROW_GROUPS_CACHE[(sf_dir, t)] = v
+
+
+@contextmanager
+def conf_override(spark, settings: dict[str, str]):
+    """Set session confs for the block; restore each afterwards (unset
+    when it was not set before)."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
+def forged_bytes(sf_dir: str, name: str, nbytes: int):
+    """Make the size-gated hint helpers see table ``name`` as ``nbytes``."""
+    from .catalog import _TABLE_BYTES_CACHE
+
+    key = (sf_dir, name)
+    saved = _TABLE_BYTES_CACHE.get(key)
+    _TABLE_BYTES_CACHE[key] = nbytes
+    try:
+        yield
+    finally:
+        if saved is None:
+            _TABLE_BYTES_CACHE.pop(key, None)
+        else:
+            _TABLE_BYTES_CACHE[key] = saved

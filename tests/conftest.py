@@ -27,3 +27,16 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_sf_dir() -> str:
     return SF_DIR_ORACLE
+
+
+@pytest.fixture(autouse=True)
+def _clear_cache_after_test():
+    """One owner of test cache hygiene: what a test persists must not
+    turn the next test's plans into cache reads.  Touches only an
+    existing session, so pure-Python tests start no JVM."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()

@@ -168,7 +168,6 @@ def _golden_path(name: str) -> str:
 
 @pytest.mark.parametrize("name", ASYMPTOTIC_PINNED)
 def test_asymptotic_plan_golden(spark, sf_dir, name):
-    spark.catalog.clearCache()  # see test_tpcds_exchange_budgets
     with asymptotic_mode(spark, sf_dir):
         df = REGISTRY[name].fn(spark, sf_dir)
         ops = operators_in_plan(df)
@@ -214,11 +213,11 @@ def test_asymptotic_plan_golden(spark, sf_dir, name):
 #   (1×1 rows) recurs across its persisted-candidate branches, hence
 #   the repeat count.
 #
-# OPAQUE nodes (round-11 advice): scans_under_broadcast now also
-# reports ReusedExchange / InMemoryTableScan descendants of a
-# BroadcastExchange as `<opaque:OpName>` markers, because a cached or
-# reused build side prints no FileScan of its own and could otherwise
-# smuggle a scaling scan past this contract.  Each allowlisted marker
+# OPAQUE nodes (round-11 advice): scans_under_broadcast also reports
+# ReusedExchange / InMemoryTableScan descendants of a BroadcastExchange
+# as `<opaque:OpName>` markers, because a reused build side has no scan
+# of its own and a cached one reads a lineage that executed elsewhere,
+# so either could otherwise smuggle a scaling scan past this contract.  Each allowlisted marker
 # was adjudicated by reading the subtree between the opaque node and
 # its exchange:
 #
@@ -232,7 +231,7 @@ def test_asymptotic_plan_golden(spark, sf_dir, name):
 # - text_bm25_multiquery: the marker is the persisted tf working set
 #   read by the df aggregate — the broadcast above it is |terms|-
 #   bounded (one row per distinct query term); the first 'documents'
-#   is that cache's printed LINEAGE (the tokenize+semi-join definition
+#   is that cache's walked LINEAGE (the tokenize+semi-join definition
 #   inside the InMemoryRelation — executed once into the cache, not
 #   broadcast), the second is the keyless 1-row N/avgdl stats scan,
 #   same as text_bm25_topk's entry.
@@ -271,7 +270,6 @@ def test_no_scaling_broadcast_at_asymptote(spark, sf_dir, name):
     ALLOWED_BOUNDED_BROADCASTS, pinned exactly (test_dim_hint.py
     asserts the size gates per-helper; this asserts the composed
     plans at the ladder's endpoint)."""
-    spark.catalog.clearCache()
     with asymptotic_mode(spark, sf_dir):
         df = REGISTRY[name].fn(spark, sf_dir)
         scanned = scans_under_broadcast(df)

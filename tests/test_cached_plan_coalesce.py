@@ -21,8 +21,10 @@ Two pins:
 
 from __future__ import annotations
 
+from datafusion_comet_spark.plans import executed_plan
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.session import DEFAULT_CONF
+from datafusion_comet_spark.testing import conf_override
 
 REGISTRY = load_all()
 
@@ -35,23 +37,26 @@ def test_session_enables_cached_plan_repartitioning():
 
 
 def test_cached_subtree_gets_aqe_shuffle_read(spark, sf_dir):
-    spark.catalog.clearCache()  # the cache must materialize under test
-    df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
-    df.collect()
-    txt = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "InMemoryRelation" in txt, "query lost its persist()"
-    cached = txt[txt.index("InMemoryRelation") :]
-    # The cached relation prints its own AdaptiveSparkPlan/Final Plan.
-    # Flag ON: the cached plan's final aggregate reads through an
-    # AQEShuffleRead sitting ABOVE its ShuffleQueryStage (size-adapted
-    # partitions).  Flag OFF (the default): the aggregate sits directly
-    # on the ShuffleQueryStage — the raw |shuffle.partitions| layout —
-    # which is exactly the structural diff between
-    # plans/r12/tpcds_return_ratio_rank_{before,after}.txt.
-    head = cached[:2000]
-    i_read = head.find("AQEShuffleRead")
-    i_stage = head.find("ShuffleQueryStage")
-    assert i_stage != -1, head
-    assert i_read != -1 and i_read < i_stage, head
+    # 32 shuffle partitions (the session default follows the core count):
+    # a single-partition shuffle has nothing to coalesce
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "32"}):
+        df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
+        df.collect()
+    relations = [
+        n for n in executed_plan(df).walk(distinct=True)
+        if n.name == "InMemoryRelation"
+    ]
+    assert relations, "query lost its persist()"
+    # The cached relation holds its own AdaptiveSparkPlan, final after the
+    # collect.  Flag ON: the cached plan's final aggregate reads through
+    # an AQEShuffleRead that is the parent of its ShuffleQueryStage
+    # (size-adapted partitions).  Flag OFF (the default): the aggregate
+    # sits directly on the ShuffleQueryStage — the raw
+    # |shuffle.partitions| layout — which is exactly the structural diff
+    # between plans/r12/tpcds_return_ratio_rank_{before,after}.txt.
+    cached = relations[0].subplans[0]
+    ops = [n.name for n in cached.walk()]
+    parents = {id(c): n.name for n in cached.walk() for c in n.children}
+    stages = [n for n in cached.walk() if n.name == "ShuffleQueryStage"]
+    assert stages, ops
+    assert all(parents[id(s)] == "AQEShuffleRead" for s in stages), ops

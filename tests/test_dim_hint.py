@@ -21,45 +21,22 @@ source of a broadcast join:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from datafusion_comet_spark.catalog import _TABLE_BYTES_CACHE, table_bytes
+from datafusion_comet_spark.catalog import table_bytes
+from datafusion_comet_spark.plans import operators_in_plan
 from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import conf_override, forged_bytes
 
 
-@contextmanager
 def _no_auto_broadcast(spark):
-    saved = {}
-    for k in (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    ):
-        saved[k] = spark.conf.get(k)
-        spark.conf.set(k, "-1")
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    return conf_override(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    })
 
 
-@contextmanager
-def _forged_bytes(sf_dir: str, name: str, nbytes: int):
-    key = (sf_dir, name)
-    saved = _TABLE_BYTES_CACHE.get(key)
-    _TABLE_BYTES_CACHE[key] = nbytes
-    try:
-        yield
-    finally:
-        if saved is None:
-            _TABLE_BYTES_CACHE.pop(key, None)
-        else:
-            _TABLE_BYTES_CACHE[key] = saved
-
-
-def _final_plan(df) -> str:
+def _final_ops(df) -> list[str]:
     df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+    return operators_in_plan(df)
 
 
 def test_dim_hint_flips_with_table_size(spark, sf_dir):
@@ -70,18 +47,18 @@ def test_dim_hint_flips_with_table_size(spark, sf_dir):
 
     with _no_auto_broadcast(spark):
         # small regime: only the hint can broadcast, and it does
-        plan_small = _final_plan(q14(spark, sf_dir))
-        assert "BroadcastHashJoin" in plan_small, plan_small[:1500]
+        ops_small = _final_ops(q14(spark, sf_dir))
+        assert "BroadcastHashJoin" in ops_small, ops_small
 
         # forged 1 GB part: the hint is withheld; with auto-broadcast
         # off the join must fall back to a shuffle strategy
-        with _forged_bytes(sf_dir, "part", 1 << 30):
-            plan_large = _final_plan(q14(spark, sf_dir))
-            assert "BroadcastHashJoin" not in plan_large, plan_large[:1500]
+        with forged_bytes(sf_dir, "part", 1 << 30):
+            ops_large = _final_ops(q14(spark, sf_dir))
+            assert "BroadcastHashJoin" not in ops_large, ops_large
             assert (
-                "SortMergeJoin" in plan_large
-                or "ShuffledHashJoin" in plan_large
-            ), plan_large[:1500]
+                "SortMergeJoin" in ops_large
+                or "ShuffledHashJoin" in ops_large
+            ), ops_large
 
 
 def test_dim_hint_results_identical_across_regimes(spark, sf_dir):
@@ -91,7 +68,7 @@ def test_dim_hint_results_identical_across_regimes(spark, sf_dir):
     for name in ("q14_promo_revenue", "q17_small_quantity"):
         fn = reg[name].fn
         base = fn(spark, sf_dir).collect()
-        with _no_auto_broadcast(spark), _forged_bytes(sf_dir, "part", 1 << 30):
+        with _no_auto_broadcast(spark), forged_bytes(sf_dir, "part", 1 << 30):
             large = fn(spark, sf_dir).collect()
         assert base == large, (name, base[:3], large[:3])
 
@@ -103,10 +80,10 @@ def test_fixed_dims_always_hinted(spark, sf_dir):
     reg = load_all()
     q5 = reg["q5_local_supplier"].fn
     with _no_auto_broadcast(spark), \
-         _forged_bytes(sf_dir, "nation", 1 << 30), \
-         _forged_bytes(sf_dir, "region", 1 << 30):
-        plan = _final_plan(q5(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan, plan[:1500]
+         forged_bytes(sf_dir, "nation", 1 << 30), \
+         forged_bytes(sf_dir, "region", 1 << 30):
+        ops = _final_ops(q5(spark, sf_dir))
+    assert "BroadcastHashJoin" in ops, ops
 
 
 def test_table_bytes_is_positive_and_cached(sf_dir):

@@ -8,10 +8,12 @@ contract, not an accident — a regression that swaps a broadcast join
 for a shuffled one, or drops TakeOrderedAndProject for a global sort,
 changes no rows at test scale but is a cliff at 100 TB.
 
-Goldens store the ordered physical operator-name sequence (names only,
-as `plans.introspect` extracts them — formatting and expression ids
-vary across Spark versions, operator sequences don't).  Regenerate
-after an intentional plan change with:
+Goldens store the ordered physical operator-name sequence: the
+pre-order walk of the planned tree (``plans.operators_in_plan``; each
+node, then its subqueries and cached plans, then its inputs — the order
+Spark prints them).  Names only: expression ids and formatting vary
+across Spark versions, operator sequences don't.  Regenerate after an
+intentional plan change with:
 
     SPARK_GRAFT_REGEN_GOLDENS=1 python -m pytest tests/test_plan_stability.py
 """
@@ -158,11 +160,6 @@ def test_plan_matches_golden(spark, sf_dir, name):
             "round-9 ladder note)"
         )
 
-    # goldens are pinned from a CLEAN cache — a lingering persisted
-    # subtree (e.g. tpcds_return_ratio_rank's candidate aggregate)
-    # would rewrite matching plans into InMemoryRelation and the
-    # operator sequence would drift (see test_tpcds_exchange_budgets)
-    spark.catalog.clearCache()
     df = REGISTRY[name].fn(spark, sf_dir)
     ops = operators_in_plan(df)
     large = name in LARGE_REGIME_PINNED and scale_regime(sf_dir)

@@ -14,14 +14,17 @@ from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import (
     broadcast_join_count,
+    executed_plan,
     operators_in_plan,
-    plan_string,
     pushed_filters,
+    scan_passes,
+    shuffle_count,
 )
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import (
     beyond_pinned_regime as _beyond_pinned_regime,
 )
+from datafusion_comet_spark.testing import conf_override
 from datafusion_comet_spark.testing import scale_regime as _scale_regime
 
 
@@ -40,6 +43,19 @@ def _skip_if_beyond_pinned_regime(sf_dir):
 REGISTRY = load_all()
 
 
+def _python_eval_ops(ops: list[str]) -> list[str]:
+    return [op for op in ops if op.startswith(("BatchEvalPython", "ArrowEvalPython"))]
+
+
+def _scans(df) -> list:
+    """Distinct file scans of ``df``'s plan (a cached plan counts once)."""
+    return [n for n in executed_plan(df).walk(distinct=True) if n.name == "FileScan"]
+
+
+def _join_types(df) -> list[str]:
+    return [n.join_type for n in executed_plan(df).walk() if n.join_type]
+
+
 def test_q6_filters_reach_parquet_scan(spark, sf_dir):
     df = REGISTRY["q6_forecast_revenue"].fn(spark, sf_dir)
     pf = pushed_filters(df)
@@ -54,15 +70,13 @@ def test_q5_broadcasts_dimension_tables(spark, sf_dir):
 
 def test_q1_is_two_phase_hash_aggregate(spark, sf_dir):
     df = REGISTRY["q1_pricing_summary"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "HashAggregate" in plan
     # partial + final aggregation around a single exchange
-    assert plan.count("HashAggregate") >= 2
+    assert operators_in_plan(df).count("HashAggregate") >= 2
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
     df = REGISTRY["q3_shipping_priority"].fn(spark, sf_dir)
-    assert "TakeOrderedAndProject" in plan_string(df, "simple")
+    assert "TakeOrderedAndProject" in operators_in_plan(df)
 
 
 def test_no_python_udf_in_registered_queries(spark, sf_dir):
@@ -75,8 +89,7 @@ def test_no_python_udf_in_registered_queries(spark, sf_dir):
     for name, q in REGISTRY.items():
         if "udtf" in q.tags:
             continue
-        plan = plan_string(q.fn(spark, sf_dir), "simple")
-        if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
+        if _python_eval_ops(operators_in_plan(q.fn(spark, sf_dir))):
             offenders.append(name)
     assert not offenders, f"Python in hot path: {offenders}"
 
@@ -85,22 +98,22 @@ def test_scan_prunes_columns(spark, sf_dir):
     """Column pruning: a two-column projection must not read the full
     lineitem schema."""
     df = REGISTRY["q6_forecast_revenue"].fn(spark, sf_dir)
-    plan = plan_string(df, "formatted")
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema, "no ReadSchema in formatted plan"
-    line = read_schema[0]
-    assert "l_returnflag" not in line and "l_orderkey" not in line, line
+    scans = _scans(df)
+    assert scans, "no file scan in the plan"
+    for scan in scans:
+        assert not {"l_returnflag", "l_orderkey"} & set(scan.read_schema), (
+            scan.read_schema
+        )
 
 
 def test_semi_join_planned_for_exists(spark, sf_dir):
     df = REGISTRY["q4_order_priority"].fn(spark, sf_dir)
-    ops = " ".join(operators_in_plan(df))
-    assert "LeftSemi" in plan_string(df, "simple") or "Semi" in ops
+    assert "LeftSemi" in _join_types(df)
 
 
 def test_anti_join_planned_for_not_exists(spark, sf_dir):
     df = REGISTRY["q22_sales_opportunity"].fn(spark, sf_dir)
-    assert "LeftAnti" in plan_string(df, "simple")
+    assert "LeftAnti" in _join_types(df)
 
 
 def test_minhash_self_join_reuses_exchange(spark, sf_dir):
@@ -109,26 +122,28 @@ def test_minhash_self_join_reuses_exchange(spark, sf_dir):
     (without it the whole interpreted shingle computation runs twice)."""
     df = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan or "reused" in plan.lower(), plan[:2000]
+    ops = operators_in_plan(df)
+    assert "ReusedExchange" in ops, ops
 
 
 def test_range_partition_plans_range_exchange(spark, sf_dir):
     df = REGISTRY["shuffle_range_partition"].fn(spark, sf_dir)
-    assert "rangepartitioning" in plan_string(df, "simple").lower()
+    kinds = [n.partitioning for n in executed_plan(df).walk()]
+    assert "RangePartitioning" in kinds, kinds
 
 
 def test_salted_join_spreads_key(spark, sf_dir):
-    """The salted join's shuffle key must include the salt column —
-    that's the whole point (hot key fans out across N reducers)."""
+    """The salted join's key must include the salt column — that's the
+    whole point (once the join shuffles, a hot key fans out across N
+    reducers)."""
     df = REGISTRY["join_skew_salted"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "salt" in plan, plan[:2000]
+    keys = [n.join_keys for n in executed_plan(df).walk() if n.join_type]
+    assert keys and all("salt" in k for k in keys), keys
 
 
 def test_merge_hint_plans_sort_merge_join(spark, sf_dir):
     df = REGISTRY["join_sort_merge"].fn(spark, sf_dir)
-    assert "SortMergeJoin" in plan_string(df, "simple")
+    assert "SortMergeJoin" in operators_in_plan(df)
 
 
 def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
@@ -142,7 +157,6 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
 
     def build():
         part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
@@ -157,20 +171,13 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
         )
 
     baseline = build().collect()
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_override(spark, confs):
         df = build()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "bloom_filter_agg" in plan and "might_contain" in plan
-        assert "ObjectHashAggregate" in plan
+        nodes = list(executed_plan(df).walk())
+        classes = set().union(*(n.expression_classes for n in nodes))
+        assert {"BloomFilterAggregate", "BloomFilterMightContain"} <= classes
+        assert "ObjectHashAggregate" in [n.name for n in nodes]
         assert df.collect() == baseline
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bucketed_join_has_no_exchange_below_join(spark, sf_dir):
@@ -178,11 +185,14 @@ def test_bucketed_join_has_no_exchange_below_join(spark, sf_dir):
     subtree must contain no Exchange (the only shuffle allowed in the
     whole plan is the final groupBy's)."""
     df = REGISTRY["join_bucketed_colocated"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "SortMergeJoin" in plan, plan[:2000]
-    join_subtree = plan[plan.index("SortMergeJoin"):]
-    assert "Exchange" not in join_subtree, join_subtree[:2000]
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan[:2000]
+    joins = [n for n in executed_plan(df).walk() if n.name == "SortMergeJoin"]
+    assert joins, operators_in_plan(df)
+    below = [n for n in joins[0].walk() if n is not joins[0]]
+    assert not any(n.cls.endswith("ExchangeExec") for n in below), [
+        n.name for n in below
+    ]
+    scans = [n for n in below if n.name == "FileScan"]
+    assert scans and all(n.jnode.bucketedScan() for n in scans)
 
 
 def test_sessionize_single_user_exchange(spark, sf_dir):
@@ -191,13 +201,12 @@ def test_sessionize_single_user_exchange(spark, sf_dir):
     the whole point of the pattern at 100 TB (SCALE.md).  Windows add
     partition-local sorts but no second shuffle of the event table."""
     df = REGISTRY["events_sessionize"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    hash_exchanges = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "user_id" in ln
+    exchanges = [
+        n.partition_keys
+        for n in executed_plan(df).walk()
+        if n.partitioning == "HashPartitioning"
     ]
-    assert len(hash_exchanges) == 1, plan[:3000]
+    assert [k for k in exchanges if "user_id" in k] == [["user_id"]], exchanges
 
 
 def test_topk_per_group_pushes_window_group_limit(spark, sf_dir):
@@ -205,7 +214,7 @@ def test_topk_per_group_pushes_window_group_limit(spark, sf_dir):
     per-partition top-k pruning Spark inserts before the full window
     sort — the window analog of TakeOrderedAndProject)."""
     df = REGISTRY["window_topk_per_group"].fn(spark, sf_dir)
-    assert "WindowGroupLimit" in plan_string(df, "simple")
+    assert "WindowGroupLimit" in operators_in_plan(df)
 
 
 def test_funnel_single_pass_over_events(spark, sf_dir):
@@ -213,25 +222,24 @@ def test_funnel_single_pass_over_events(spark, sf_dir):
     conditional-min collapse replaces the naive one-self-join-per-stage
     shape."""
     df = REGISTRY["events_funnel"].fn(spark, sf_dir)
-    plan = plan_string(df, "formatted")
-    scans = [ln for ln in plan.splitlines() if ln.startswith("Location: InMemoryFileIndex")]
-    assert len(scans) == 1, plan[:3000]
+    assert len(_scans(df)) == 1, operators_in_plan(df)
 
 
 def test_higher_order_lambdas_stay_jvm_side(spark, sf_dir):
     """Array lambdas (filter/aggregate/exists) must evaluate as
     Catalyst expressions, not Python UDFs."""
     df = REGISTRY["expr_higher_order"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "aggregate(" in plan or "transform(" in plan or "exists(" in plan, plan[:2000]
+    nodes = list(executed_plan(df).walk())
+    assert not _python_eval_ops([n.name for n in nodes])
+    classes = set().union(*(n.expression_classes for n in nodes))
+    assert {"ArrayAggregate", "ArrayTransform", "ArrayExists"} & classes, classes
 
 
 def test_theta_join_plans_broadcast_nested_loop(spark, sf_dir):
     """A pure-inequality join must broadcast the dimension side and run
     as BroadcastNestedLoopJoin — never a shuffled cartesian."""
     df = REGISTRY["join_theta_nested_loop"].fn(spark, sf_dir)
-    assert "BroadcastNestedLoopJoin" in plan_string(df, "simple")
+    assert "BroadcastNestedLoopJoin" in operators_in_plan(df)
 
 
 def test_vocab_topk_uses_take_ordered(spark, sf_dir):
@@ -239,15 +247,14 @@ def test_vocab_topk_uses_take_ordered(spark, sf_dir):
     heap + merge) — a full global sort of the vocabulary would shuffle
     every distinct token at 100 TB."""
     df = REGISTRY["vocab_top_tokens"].fn(spark, sf_dir)
-    assert "TakeOrderedAndProject" in plan_string(df, "simple")
+    assert "TakeOrderedAndProject" in operators_in_plan(df)
 
 
 def test_variant_extract_stays_jvm_side(spark, sf_dir):
     """parse_json/variant_get must evaluate as JVM expressions (no
     Python UDF stage) so the scan-side projection stays in codegen."""
     df = REGISTRY["expr_variant"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert not _python_eval_ops(operators_in_plan(df))
 
 
 def test_retention_reuses_user_exchange(spark, sf_dir):
@@ -255,9 +262,8 @@ def test_retention_reuses_user_exchange(spark, sf_dir):
     user_id; AQE must not insert a second full exchange of events beyond
     the two the pattern needs (one per side of the self-join)."""
     df = REGISTRY["events_retention"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
     # events is scanned once per side but never more
-    assert plan.count("Scan parquet") <= 2
+    assert operators_in_plan(df).count("FileScan") <= 2
 
 
 def test_analyze_table_records_cbo_statistics(spark, sf_dir):
@@ -321,9 +327,9 @@ def test_shuffle_hash_hint_plans_shuffled_hash_join(spark, sf_dir):
     (hash build, no per-side sort) — the join-strategy lever behind
     the reference's replaceSortMergeJoin tuning (BASELINE.md)."""
     df = REGISTRY["join_shuffle_hash_hint"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "ShuffledHashJoin" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, plan[:2000]
+    ops = operators_in_plan(df)
+    assert "ShuffledHashJoin" in ops, ops
+    assert "SortMergeJoin" not in ops, ops
 
 
 def test_cache_table_plans_in_memory_scan(spark, sf_dir):
@@ -335,22 +341,17 @@ def test_cache_table_plans_in_memory_scan(spark, sf_dir):
     spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
         "dcs_cache_nation"
     )
+
+    def scan_classes():
+        df = spark.table("dcs_cache_nation").groupBy("n_regionkey").count()
+        return [n.cls for n in executed_plan(df).walk() if "Scan" in n.cls]
+
     spark.catalog.cacheTable("dcs_cache_nation")
     try:
-        plan = plan_string(
-            spark.table("dcs_cache_nation").groupBy("n_regionkey").count(),
-            "simple",
-        )
-        assert "In-memory table" in plan or "InMemoryTableScan" in plan, (
-            plan[:1500]
-        )
+        assert "InMemoryTableScanExec" in scan_classes(), scan_classes()
     finally:
         spark.catalog.uncacheTable("dcs_cache_nation")
-    plan = plan_string(
-        spark.table("dcs_cache_nation").groupBy("n_regionkey").count(),
-        "simple",
-    )
-    assert "In-memory table" not in plan and "InMemoryTableScan" not in plan
+    assert scan_classes() == ["FileSourceScanExec"], scan_classes()
 
 
 def test_many_shard_union_flattens_to_single_union(spark, sf_dir):
@@ -378,15 +379,9 @@ def test_curation_pipeline_v2_exchange_budget(spark, sf_dir):
     rollup; the eval-shingle side must be a BroadcastExchange, never a
     shuffled join input)."""
     df = REGISTRY["pipeline_corpus_curation_v2"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "Reused" not in ln
-    )
-    assert n_exchange <= 5, f"{n_exchange} exchanges:\n{plan[:3000]}"
-    assert "BroadcastExchange" in plan, plan[:2000]
+    ops = operators_in_plan(df)
+    assert ops.count("Exchange") <= 5, ops
+    assert "BroadcastExchange" in ops, ops
 
 
 def test_doc_pack_greedy_two_exchanges(spark, sf_dir):
@@ -395,14 +390,8 @@ def test_doc_pack_greedy_two_exchanges(spark, sf_dir):
     pin it: at most 3 non-broadcast exchanges including the final
     orderBy's range partition."""
     df = REGISTRY["doc_pack_greedy"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "Reused" not in ln
-    )
-    assert n_exchange <= 3, f"{n_exchange} exchanges:\n{plan[:3000]}"
+    ops = operators_in_plan(df)
+    assert ops.count("Exchange") <= 3, ops
 
 
 def test_aqe_splits_skewed_join_partition(spark, sf_dir):
@@ -418,32 +407,22 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
     designed-in fix for KNOWN hot keys, AQE skew split is the runtime
     fix for the ones nobody predicted.  Thresholds are lowered here
     because the condition is physical partition BYTES, not row ratios
-    — the 2 MB test partition must register as 'skewed'."""
-    conf = spark.conf
-    saved = {
-        k: conf.get(k)
-        for k in (
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "64KB",
-        )
-        conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
+    — the 2 MB test partition must register as 'skewed' — and the
+    partitioning is pinned (8 map tasks, 32 shuffle partitions), because
+    skew is judged against the median partition and split along map
+    outputs (the session defaults follow the core count)."""
+    with conf_override(spark, {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         # force a sort-merge join: skew split applies to shuffled joins
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }):
         fact = (
-            spark.range(0, 120_000)
+            spark.range(0, 120_000, numPartitions=8)  # split along map outputs
             .select(
                 F.when(F.col("id") % 10 < 9, F.lit(1))
                 .otherwise(F.col("id") % 100)
@@ -467,17 +446,12 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"), F.max("payload").alias("p"))
         )
         joined.collect()  # materialize so AQE finalizes the plan
-        final_plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in final_plan
-        assert "skew=true" in final_plan or "skewed" in final_plan, (
-            "AQE did not mark the skewed join:\n" + final_plan[:4000]
+        final_plan = executed_plan(joined)
+        assert final_plan.jnode.isFinalPlan()
+        joins = [n for n in final_plan.walk() if n.join_type]
+        assert any(n.skew_join for n in joins), (
+            f"AQE did not mark the skewed join: {[n.name for n in joins]}"
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def test_python_datasource_pushdown_prunes_partitions(spark, sf_dir):
@@ -575,23 +549,20 @@ TPCH_EXCHANGE_BUDGET_LARGE = {
     "q21_scale_rewrite": 4,
 }
 
+def _exchange_budget_drift(spark, sf_dir, budgets: dict) -> dict:
+    """(expected, actual) hash/range shuffle counts that differ."""
+    actual = {
+        name: shuffle_count(REGISTRY[name].fn(spark, sf_dir)) for name in budgets
+    }
+    return {n: (b, actual[n]) for n, b in budgets.items() if actual[n] != b}
+
+
 def test_tpch_exchange_budgets(spark, sf_dir):
     _skip_if_beyond_pinned_regime(sf_dir)
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    # clean-cache start: see test_tpcds_exchange_budgets
-    spark.catalog.clearCache()
     budgets = dict(TPCH_EXCHANGE_BUDGET)
     if _scale_regime(sf_dir):
         budgets.update(TPCH_EXCHANGE_BUDGET_LARGE)
-    diffs = {}
-    for name, budget in budgets.items():
-        p = _ps(REGISTRY[name].fn(spark, sf_dir), "simple")
-        n = p.count("Exchange hashpartitioning") + p.count(
-            "Exchange rangepartitioning"
-        )
-        if n != budget:
-            diffs[name] = (budget, n)
+    diffs = _exchange_budget_drift(spark, sf_dir, budgets)
     assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
 
 
@@ -674,8 +645,9 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
     query may plan an unpartitioned WindowExec over unbounded-
     cardinality input — the single reducer that holds 100 TB.
 
-    Detection: a ``Window`` operator whose immediate subtree contains
-    ``Exchange SinglePartition``.  Exemptions:
+    Detection: a ``Window`` operator whose input spine (its chain of
+    single-input operators) reaches a SinglePartition shuffle exchange.
+    Exemptions:
       * a ``WindowGroupLimit`` between the Window and the exchange —
         rank()<=k pruning sends each upstream partition's top-k only
         (no current query needs it — q15's protected rank was
@@ -690,58 +662,33 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
     favor of broadcast-scalar / TakeOrdered+count-rank spellings; this
     test keeps them retired.
     """
-    import re
-
-    def _indent(ln: str) -> int:
-        # chars before the operator name: spaces plus the tree-drawing
-        # ':', '+', '-' rail characters
-        return len(re.match(r"^[\s:+-]*", ln).group(0))
+    def single_partition_feed(window) -> bool:
+        # Follow the Window's input spine through single-input operators
+        # to the first shuffle exchange: that exchange, however many
+        # Project/Filter/Sort nodes away, is what partitions the
+        # Window's input.  The spine stops at a binary operator (join,
+        # union): an exchange below it partitions only that operator's
+        # input.  A WindowGroupLimit on the spine (rank-limit pruning)
+        # bounds the feed.
+        node = window
+        while len(node.children) == 1:
+            node = node.children[0]
+            if node.name == "WindowGroupLimit":
+                return False
+            if node.partitioning is not None:
+                return node.partitioning == "SinglePartition"
+        return False
 
     offenders = []
     for name, q in REGISTRY.items():
-        plan = plan_string(q.fn(spark, sf_dir), "simple")
-        lines = plan.splitlines()
-        for i, ln in enumerate(lines):
-            if "WindowGroupLimit" in ln or not re.search(r"\bWindow\b", ln):
-                continue
-            # Walk the Window's direct input spine: consecutive lines of
-            # strictly increasing indent (each unary child one level
-            # deeper) until the first Exchange — that exchange, however
-            # many Project/Filter/Sort nodes away, is what feeds the
-            # Window.  The old 4-line text lookahead missed deeper
-            # exchanges and credited WindowGroupLimits belonging to
-            # adjacent operators.  The walk stops at the first BINARY
-            # operator: a join/union's left child also renders strictly
-            # deeper, so continuing would attribute an Exchange inside a
-            # join's left leg to the Window's feed (false offender for
-            # Window-over-join plans).  An Exchange below a binary node
-            # partitions only that node's input, not the Window's.
-            _binary = re.compile(
-                r"\b(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
-                r"BroadcastNestedLoopJoin|CartesianProduct|Union)\b"
-            )
-            spine: list[str] = []
-            prev = _indent(ln)
-            exchange_line = None
-            for nxt in lines[i + 1 :]:
-                d = _indent(nxt)
-                if d <= prev:
-                    break  # sibling branch — spine ends
-                prev = d
-                if _binary.search(nxt):
-                    break  # binary node: its children are not the spine
-                if "Exchange" in nxt:
-                    exchange_line = nxt
-                    break
-                spine.append(nxt)
-            if exchange_line is None or "SinglePartition" not in exchange_line:
-                continue
-            if any("WindowGroupLimit" in s for s in spine):
-                continue  # rank-limit pruned ON THE PATH: bounded feed
-            if name in _SINGLE_WINDOW_BOUNDED:
-                continue
+        windows = [
+            n for n in executed_plan(q.fn(spark, sf_dir)).walk()
+            if n.name == "Window"
+        ]
+        if name not in _SINGLE_WINDOW_BOUNDED and any(
+            single_partition_feed(w) for w in windows
+        ):
             offenders.append(name)
-            break
     assert not offenders, (
         f"unpartitioned WindowExec over unbounded input: {offenders}"
     )
@@ -753,24 +700,15 @@ def test_q11_threshold_reuses_fact_exchange(spark, sf_dir):
     shows the per-part aggregate's exchange reused by the 1-row
     re-aggregation branch, and no Window operator exists anywhere in
     the plan (the retired single-reducer spelling)."""
-    import io
-    from contextlib import redirect_stdout
-
     # pinned to sf0.01: at sf0.001 AQE broadcast-converts every join
     # and no shuffle stage exists at all (nothing to reuse); the claim
     # under test is about the scale regime where the per-part
     # aggregate DOES shuffle
     df = REGISTRY["q11_important_stock"].fn(spark, "/root/testdata/sf0.01")
     df.collect()
-    # the FORMATTED post-execution explain is the rendering that shows
-    # AQE stage reuse (the adaptive plan's raw toString flattens
-    # materialized stages and hides it)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode="formatted")
-    plan = buf.getvalue()
-    assert "ReusedExchange" in plan, plan[:3000]
-    assert "Window" not in plan, plan[:3000]
+    ops = operators_in_plan(df)  # the final plan, with AQE stage reuse
+    assert "ReusedExchange" in ops, ops
+    assert "Window" not in ops, ops
 
 
 def test_temperature_mixture_shuffle_budget(spark, sf_dir):
@@ -783,17 +721,10 @@ def test_temperature_mixture_shuffle_budget(spark, sf_dir):
     that duplicates the whole count subtree (its branches differ by a
     join-null filter, so ReuseExchange cannot merge them)."""
     df = REGISTRY["sample_temperature_mixture"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "Reused" not in ln
-    )
-    assert n_exchange <= 4, f"{n_exchange} exchanges:\n{plan[:3000]}"
-    assert "BroadcastExchange" in plan, plan[:3000]
-    n_scans = plan.count("FileScan parquet")
-    assert n_scans <= 2, f"{n_scans} corpus scans:\n{plan[:3000]}"
+    ops = operators_in_plan(df)
+    assert ops.count("Exchange") <= 4, ops
+    assert "BroadcastExchange" in ops, ops
+    assert ops.count("FileScan") <= 2, ops
 
 
 def test_epoch_repetition_never_shuffles_by_doc_id(spark, sf_dir):
@@ -801,13 +732,14 @@ def test_epoch_repetition_never_shuffles_by_doc_id(spark, sf_dir):
     on doc_id: every hash exchange must be keyed on source only, and
     the two per-source aggregates meet in a broadcast join."""
     df = REGISTRY["corpus_epoch_repetition"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    for ln in plan.splitlines():
-        if "Exchange hashpartitioning" in ln and "Reused" not in ln:
-            assert "doc_id" not in ln, f"doc_id exchange: {ln}"
-    assert "BroadcastExchange" in plan, plan[:3000]
+    nodes = list(executed_plan(df).walk())
+    for n in nodes:
+        if n.partitioning == "HashPartitioning":
+            assert "doc_id" not in n.partition_keys, n.partition_keys
+    ops = [n.name for n in nodes]
+    assert "BroadcastExchange" in ops, ops
     # the fan-out is a Generate (explode) node, map-side
-    assert "Generate" in plan, plan[:3000]
+    assert "Generate" in ops, ops
 
 
 def test_sample_prefix():
@@ -844,65 +776,40 @@ def test_sample_prefix():
     assert rows_only == [], rows_only
 
 
-def _table_scan_count(df, table: str, post_exec: bool = False) -> int:
-    """Count FileScan passes over one table in the FINAL physical plan.
-
-    The formatted explain of an executed AdaptiveSparkPlan prints the
-    Final Plan tree, then the Initial Plan tree, then one detail block
-    per node id from BOTH trees — so counting raw `Location:` lines
-    double-counts every scan.  Instead: collect scan node ids from the
-    Final Plan tree only, then resolve each id's table via its detail
-    block."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    if post_exec:
-        df.collect()
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode="formatted")
-    text = buf.getvalue()
-    final_tree = text.split("== Initial Plan ==")[0]
-    ids = re.findall(r"Scan parquet\s*\((\d+)\)", final_tree)
-    count = 0
-    for block in text.split("\n\n"):
-        m = re.match(r"\((\d+)\) Scan parquet", block)
-        if m and m.group(1) in ids and f"{table}.parquet" in block:
-            count += 1
-    return count
-
-
 def test_date_intersect_returns_single_orders_pass(spark, sf_dir):
     """tpcds_date_intersect_returns (q83 shape) promises ONE orders
     pass: the naive three INTERSECT legs + share re-aggregate each
     rescan orders; the rewrite collapses them (SCALE.md:788).
-    Post-execution explain so AQE's ReusedExchange materialization is
-    visible."""
+    Counted after execution, when AQE's ReusedExchange has replaced the
+    repeated legs (the planned tree still shows 2 scans)."""
     df = REGISTRY["tpcds_date_intersect_returns"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "orders", post_exec=True)
+    df.collect()
+    n = scan_passes(df, "orders")
     assert n == 1, f"{n} orders passes"
 
 
-def test_multi_supplier_returned_single_lineitem_pass(spark, sf_dir):
-    """tpcds_multi_supplier_returned (q95 shape): in the executed final
-    plan the q94-style one-pass flag aggregate AND the
-    returned-distinct leg resolve to ONE physical lineitem pass — AQE
-    ReusedExchange covers the second leg (better than the naive three
-    and than SCALE.md's original two-pass claim, corrected there)."""
+def test_multi_supplier_returned_lineitem_passes(spark, sf_dir):
+    """tpcds_multi_supplier_returned (q95 shape): TWO physical lineitem
+    passes in the executed final plan — the q94-style one-pass flag
+    aggregate (multi-supplier AND returned, the membership set) and the
+    filtered detail lines it semi-joins; the naive spelling took three.
+    The earlier pin of ONE pass was a text-counter miss: the executed
+    plan holds two lineitem scans with different column sets (no
+    exchange reuse can merge them), each reading every lineitem row."""
     df = REGISTRY["tpcds_multi_supplier_returned"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "lineitem", post_exec=True)
-    assert n == 1, f"{n} lineitem passes"
+    df.collect()
+    n = scan_passes(df, "lineitem")
+    assert n == 2, f"{n} lineitem passes"
 
 
-def test_cross_channel_rollup_two_lineitem_passes(spark, sf_dir):
-    """tpcds_cross_channel_rollup (q14 shape): the count-distinct-
-    channel pass replacing the naive two channel legs, plus the report
-    pass, in the main executed plan.  Round-12 correction: the round-8
-    "ReusedExchange absorbs the threshold leg" claim was WRONG — the
-    scalar-subquery threshold is a THIRD physical pass whose scan
-    prints outside the main final-plan tree, so this counter cannot
-    see it.  Fusing the threshold into a persisted per-partkey pass
+def test_cross_channel_rollup_lineitem_passes(spark, sf_dir):
+    """tpcds_cross_channel_rollup (q14 shape): THREE physical lineitem
+    passes — the count-distinct-channel pass replacing the naive two
+    channel legs, the report pass, and the scalar-subquery threshold.
+    Round-12 correction: the round-8 "ReusedExchange absorbs the
+    threshold leg" claim was WRONG, and the explain-text counter that
+    pinned 2 could not see a scalar subquery's scan; the plan walk
+    counts it.  Fusing the threshold into a persisted per-partkey pass
     (3→2 real passes) was built and MEASURED-REJECTED: rows identical,
     but cold 1.855→2.126 s at sf0.1 and 2.513→3.115 s at generator sf1
     (the extra fact-scaled column through the orders-join exchange plus
@@ -910,8 +817,11 @@ def test_cross_channel_rollup_two_lineitem_passes(spark, sf_dir):
     scales; the warm bench win was pure cross-iteration cache reuse) —
     dev/cc_fuse_ab.py, dev/cc_fuse_ab{,_sf1}.json, OPTIMIZATION_r12.md."""
     df = REGISTRY["tpcds_cross_channel_rollup"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "lineitem", post_exec=True)
-    assert n == 2, f"{n} lineitem passes in the main final plan"
+    df.collect()
+    n = scan_passes(df, "lineitem")
+    assert n == 3, f"{n} lineitem passes"
+    scans = [s for s in _scans(df) if s.table == "lineitem"]
+    assert all(s.metrics["numOutputRows"] > 0 for s in scans)
 
 
 def test_return_ratio_rank_single_fact_pass(spark, sf_dir):
@@ -922,13 +832,14 @@ def test_return_ratio_rank_single_fact_pass(spark, sf_dir):
     executed plan rescans the fact three times (measured: 1.62x
     slower at sf0.1)."""
     df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "lineitem", post_exec=True)
+    df.collect()
+    n = scan_passes(df, "lineitem")
     assert n == 1, f"{n} lineitem passes"
 
 
 # Non-broadcast exchange budget per TPC-DS-shape query — the TPC-H
 # budget table's counterpart for the second benchmark surface.  Exact
-# static counts (simple plan string), identical at sf0.001 and sf0.1
+# static counts (planned tree, before execution), identical at sf0.001 and sf0.1
 # (verified at both before pinning).  Three design notes the counts
 # encode:
 # - tpcds_return_ratio_rank dropped 14 -> its current count when the
@@ -1032,15 +943,6 @@ TPCDS_EXCHANGE_BUDGET = {
 
 def test_tpcds_exchange_budgets(spark, sf_dir):
     _skip_if_beyond_pinned_regime(sf_dir)
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    # Static budgets are pinned from a CLEAN cache: a lingering
-    # CacheManager entry (tpcds_return_ratio_rank persists its
-    # candidate aggregate; the single-fact-pass pin test materializes
-    # it) rewrites matching subtrees into InMemoryRelation on the NEXT
-    # construction and the printed exchange count changes (observed:
-    # 14 -> 25 when this test ran after the fact-pass pin).
-    spark.catalog.clearCache()
     budgets = dict(TPCDS_EXCHANGE_BUDGET)
     if _scale_regime(sf_dir):
         # measured at gen_scale_data sf1 — see TPCH_EXCHANGE_BUDGET_LARGE
@@ -1051,14 +953,7 @@ def test_tpcds_exchange_budgets(spark, sf_dir):
                 "tpcds_underperforming_pairs": 5,
             }
         )
-    diffs = {}
-    for name, budget in budgets.items():
-        p = _ps(REGISTRY[name].fn(spark, sf_dir), "simple")
-        n = p.count("Exchange hashpartitioning") + p.count(
-            "Exchange rangepartitioning"
-        )
-        if n != budget:
-            diffs[name] = (budget, n)
+    diffs = _exchange_budget_drift(spark, sf_dir, budgets)
     assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
 
 
@@ -1068,10 +963,13 @@ def test_scd2_single_dimension_pass(spark, sf_dir):
     inner-join/anti-join/union three-leg spelling that scanned the
     dimension twice (measured 1.28x at sf0.1).  The update batch's own
     scan is separate by nature (a real SCD2 reads it from another
-    table)."""
+    table): exactly two customer scans, one of them the dimension."""
     df = REGISTRY["scd2_dimension_update"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "customer", post_exec=True)
-    assert n <= 2, f"{n} customer scans (dimension + update batch)"
+    df.collect()
+    n = scan_passes(df, "customer")
+    assert n == 2, f"{n} customer scans (dimension + update batch)"
+    dimension = [s for s in _scans(df) if "c_mktsegment" in s.read_schema]
+    assert len(dimension) == 1, [s.read_schema for s in _scans(df)]
 
 
 # Exchange budgets for the remaining non-benchmark families
@@ -1299,20 +1197,7 @@ REGISTRY_EXCHANGE_BUDGET = {
 
 
 def test_registry_exchange_budgets(spark, sf_dir):
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    # clean-cache start: see test_tpcds_exchange_budgets — persisted
-    # subtrees from earlier tests (or earlier queries in THIS loop)
-    # must not rewrite later plans into InMemoryRelation
-    spark.catalog.clearCache()
-    diffs = {}
-    for name, budget in REGISTRY_EXCHANGE_BUDGET.items():
-        p = _ps(REGISTRY[name].fn(spark, sf_dir), "simple")
-        n = p.count("Exchange hashpartitioning") + p.count(
-            "Exchange rangepartitioning"
-        )
-        if n != budget:
-            diffs[name] = (budget, n)
+    diffs = _exchange_budget_drift(spark, sf_dir, REGISTRY_EXCHANGE_BUDGET)
     assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
 
 
@@ -1323,8 +1208,9 @@ def test_registry_exchange_budgets(spark, sf_dir):
 # keeps the exchange count but multiplies scanned and shuffled bytes;
 # at 100 TB that is the difference between reading 7 and 11 of
 # lineitem's columns in q1).  Values are the sorted per-scan
-# top-level ReadSchema field counts, measured identical at sf0.001
-# and sf0.1 before pinning.
+# top-level requiredSchema field counts (nested structs/arrays count
+# as one field; a cached plan's scans count once), measured identical
+# at sf0.001 and sf0.1 before pinning.
 SCAN_WIDTH_BUDGET = {
     "q1_pricing_summary": [7],
     "q3_shipping_priority": [2, 3, 4],
@@ -1358,38 +1244,11 @@ SCAN_WIDTH_BUDGET = {
 }
 
 
-def _read_schema_widths(df) -> list:
-    """Sorted top-level field counts of every ReadSchema in the
-    formatted plan (nested structs/arrays count as one field)."""
-    import re
-
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    def width(s: str) -> int:
-        inner = s[s.index("<") + 1 :]
-        if inner.strip().startswith(">"):
-            return 0
-        depth, n = 0, 1
-        for ch in inner:
-            if ch == "<":
-                depth += 1
-            elif ch == ">":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif ch == "," and depth == 0:
-                n += 1
-        return n
-
-    plan = _ps(df, "formatted")
-    return sorted(width(m) for m in re.findall(r"ReadSchema: (struct<.*)", plan))
-
-
 def test_bench_scan_width_budgets(spark, sf_dir):
-    spark.catalog.clearCache()  # see test_tpcds_exchange_budgets
     diffs = {}
     for name, budget in SCAN_WIDTH_BUDGET.items():
-        widths = _read_schema_widths(REGISTRY[name].fn(spark, sf_dir))
+        scans = _scans(REGISTRY[name].fn(spark, sf_dir))
+        widths = sorted(len(s.read_schema) for s in scans)
         if widths != budget:
             diffs[name] = (budget, widths)
     assert not diffs, f"scan width drift (expected, actual): {diffs}"

@@ -8,7 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from datafusion_comet_spark.plans import executed_plan, operators_in_plan, walk_plan
 from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import conf_override
 
 REGISTRY = load_all()
 
@@ -309,9 +311,8 @@ def test_seeded_sample_reproducible_and_unbiased(spark, sf_dir):
     assert len(keys1) == total_sampled
     # the seed must actually reach the plan (the positional-fraction +
     # keyword-seed form does NOT propagate it)
-    good = orders.sample(fraction=0.1, seed=42)._jdf.queryExecution()
-    assert ", 42" in good.executedPlan().toString().splitlines()[0] or \
-           " 42" in [l for l in good.executedPlan().toString().splitlines() if "Sample" in l][0]
+    good = executed_plan(orders.sample(fraction=0.1, seed=42))
+    assert [n.jnode.seed() for n in good.walk() if n.name == "Sample"] == [42]
     # a different seed must give a genuinely different sample (guards
     # against a degenerate stream that ignores the seed)
     keys3 = sample_keys(43)
@@ -446,8 +447,9 @@ def test_rebalance_hint_plans_rebalance_partitions(spark, sf_dir):
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(f"{sf_dir}/orders.parquet").hint("rebalance")
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "RebalancePartitions" in optimized, optimized[:1000]
+    optimized = walk_plan(df._jdf.queryExecution().optimizedPlan())
+    ops = [n.name for n in optimized.walk()]
+    assert "RebalancePartitions" in ops, ops
     assert df.count() == spark.read.parquet(f"{sf_dir}/orders.parquet").count()
 
 
@@ -632,16 +634,17 @@ def test_dynamic_partition_pruning_on_partitioned_write(spark, sf_dir):
         "o_orderstatus string, label string",
     ).write.mode("overwrite").parquet(dim_path)
     dim = spark.read.parquet(dim_path).filter(F.col("label") == "finished")
-    saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", None)
-    spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "10000"
-    )
-    try:
+    with conf_override(spark, {
+        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio": "10000"
+    }):
         joined = fact.join(F.broadcast(dim), "o_orderstatus").groupBy(
             "label"
         ).count()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan.lower(), plan[:3000]
+        pruned = [
+            n.name for n in executed_plan(joined).walk()
+            if "DynamicPruningExpression" in n.expression_classes
+        ]
+        assert pruned == ["FileScan"], operators_in_plan(joined)
         rows = {r.label: r["count"] for r in joined.collect()}
         expected = (
             spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -649,16 +652,6 @@ def test_dynamic_partition_pruning_on_partitioned_write(spark, sf_dir):
             .count()
         )
         assert rows == {"finished": expected}
-    finally:
-        if saved is None:
-            spark.conf.unset(
-                "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio",
-                saved,
-            )
 
 
 def test_ivf_multiprobe_recall_dominates_single_probe(spark, sf_dir):
@@ -957,20 +950,13 @@ def test_ignore_corrupt_files_skips_bad_parquet(spark, sf_dir, tmp_path):
         type(ei.value)
     )
 
-    saved = spark.conf.get("spark.sql.files.ignoreCorruptFiles", None)
-    try:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    with conf_override(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
         n = (
             spark.read.schema("r_regionkey BIGINT, r_name STRING")
             .parquet(str(d))
             .count()
         )
         assert n == good_rows
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
-        else:
-            spark.conf.set("spark.sql.files.ignoreCorruptFiles", saved)
 
 
 def test_random_projection_ann_distances_and_recall(spark, sf_dir):
@@ -1342,7 +1328,6 @@ def test_join_constraint_propagation_bounds_state(spark, sf_dir):
     streaming run needed): the purchases-side scan must carry a
     pushed user_id filter it was never given explicitly."""
     from datafusion_comet_spark.catalog import load_table
-    from datafusion_comet_spark.plans import plan_string
 
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(
@@ -1352,11 +1337,13 @@ def test_join_constraint_propagation_bounds_state(spark, sf_dir):
         F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
     )
     joined = clicks.join(purchases, clicks.user_id == purchases.p_user)
-    plan = plan_string(joined, "formatted")
-    # two scans; BOTH must show a user_id/p_user < 60 pushed filter
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    with_bound = [ln for ln in pushed if "LessThan(user_id,60)" in ln]
-    assert len(with_bound) == 2, plan[:3000]
+    scans = [
+        n.pushed_filters for n in executed_plan(joined).walk()
+        if n.name == "FileScan"
+    ]
+    # two scans; BOTH must carry a user_id/p_user < 60 pushed filter
+    assert len(scans) == 2, scans
+    assert all("LessThan(user_id,60)" in f for f in scans), scans
 
 
 def test_state_source_schema_contract(spark, sf_dir):

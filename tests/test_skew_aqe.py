@@ -4,8 +4,8 @@
 pins the AUTOMATIC one: with `spark.sql.adaptive.skewJoin.enabled`
 (on in the engine's defaults, session.py), a sort-merge join whose
 shuffle produces one oversized partition must be re-planned at runtime
-with that partition split (`skew=true` marker on the join) — and the
-split must not change the result.  At 100 TB this is the difference
+with that partition split (`isSkewJoin` on the executed join) — and
+the split must not change the result.  At 100 TB this is the difference
 between one straggler task holding the stage for hours and N parallel
 tasks; the reference leaves skew handling entirely to Spark/AQE
 (SURVEY §4.1), so this behavior IS part of the rebuilt engine's
@@ -14,45 +14,32 @@ contract.
 Thresholds are lowered to make a ~40 MB test shuffle exhibit what a
 multi-GB production partition would: skewedPartitionThresholdInBytes
 and advisoryPartitionSizeInBytes scale together (the former must stay
->= the latter or AQE ignores the skew).
+>= the latter or AQE ignores the skew).  The partitioning is pinned
+(8 map tasks, 32 shuffle partitions): skew is judged against the median
+partition and split along map outputs, so the claim holds under a given
+partitioning, not under whatever the core count makes it.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
-
-@contextmanager
-def _conf(spark, settings: dict[str, str]):
-    saved = {}
-    for k, v in settings.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+from datafusion_comet_spark.plans import executed_plan
+from datafusion_comet_spark.testing import conf_override
 
 
 def test_aqe_splits_skewed_join_partition(spark):
     # left: 400k rows, ~95% on hot key 0; right: 40k rows uniform over
     # 1k keys with a payload wide enough to defeat tiny-size estimates.
-    left = spark.range(0, 400_000).select(
+    # 8 map tasks per side: AQE splits a skewed partition along map
+    # outputs, so one map task (local[1]) leaves nothing to split.
+    left = spark.range(0, 400_000, numPartitions=8).select(
         F.when(F.col("id") % 20 < 19, F.lit(0))
         .otherwise(F.col("id") % 1000)
         .alias("k"),
         F.sha2(F.col("id").cast("string"), 256).alias("lpad"),
     )
-    right = spark.range(0, 40_000).select(
+    right = spark.range(0, 40_000, numPartitions=8).select(
         (F.col("id") % 1000).alias("k"),
         F.sha2((F.col("id") + 7).cast("string"), 256).alias("rpad"),
     )
@@ -66,8 +53,9 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
         # keep AQE from coalescing everything into one partition first
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+        "spark.sql.shuffle.partitions": "32",
     }
-    with _conf(spark, settings):
+    with conf_override(spark, settings):
         # Aggregate ON the join output and read THAT DataFrame's own
         # executed plan: df.count() executes a different QueryExecution,
         # whose AQE final plan this test would never see.  min(lpad/rpad)
@@ -79,26 +67,15 @@ def test_aqe_splits_skewed_join_partition(spark):
             F.min("rpad").alias("rmin"),
         )
         n = res.collect()[0]["n"]
-        # Public-API plan capture: DataFrame.explain() prints the
-        # (post-execution, isFinalPlan=true) AQE plan Python-side, so
-        # redirect_stdout sees it — no private queryExecution() poking.
-        import io
-        from contextlib import redirect_stdout
-
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            res.explain(mode="extended")
-        plan = buf.getvalue()
+        joins = [
+            j for j in executed_plan(res).walk() if j.join_type is not None
+        ]
     # result correctness: hot key 0 matches 40 right rows, every other
     # key k matches 40 right rows too (uniform 1k keys, 40 each)
     hot_left = 400_000 * 19 // 20
     cold_left = 400_000 - hot_left
     assert n == hot_left * 40 + cold_left * 40, n
-    # "skew=true" is the SortMergeJoin marker AQE's OptimizeSkewedJoin
-    # emits in Spark 4.1's plan string (pinned to the pyspark version
-    # in this container; the marker has been stable since Spark 3.0,
-    # SPARK-29544).
-    assert "skew=true" in plan, (
-        "AQE did not mark the skewed join partition for splitting:\n"
-        + plan[:2000]
+    assert any(j.skew_join for j in joins), (
+        "AQE did not mark the skewed join partition for splitting: "
+        f"{[j.name for j in joins]}"
     )
