@@ -28,7 +28,13 @@ from .session import get_session
 
 
 class Engine:
-    """Tuned session + registered star schema + the query inventory."""
+    """Tuned session + registered star schema + the query inventory.
+
+    ``session.DEFAULT_CONF`` applies only when the engine builds the
+    session.  A session passed in as ``Engine(spark=...)`` keeps its own
+    settings, and its static confs cannot change once it exists: unless
+    its builder set one, it keeps Spark's codegen cache of 100 classes.
+    """
 
     def __init__(
         self,

@@ -1,6 +1,7 @@
 from .introspect import (  # noqa: F401
     PlanNode,
     broadcast_join_count,
+    codegen_compiles,
     executed_plan,
     operators_in_plan,
     plan_string,

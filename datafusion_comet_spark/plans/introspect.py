@@ -21,6 +21,8 @@ tree, never ``explain()`` text.  Walk rules:
 
 Walking starts no Spark job, so it is safe before ``collect()`` and
 outside timed regions.  ``plan_string`` is display only.
+``codegen_compiles`` reads the JVM's whole-stage codegen compile
+counter, so generated-class cache misses are a counted fact too.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from typing import Any
 
 from pyspark import SparkContext
 from pyspark.errors import IllegalArgumentException
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _TRANSPARENT = {"WholeStageCodegenExec", "InputAdapter"}
 _REUSED = {"ReusedExchangeExec", "ReusedSubqueryExec"}
@@ -211,6 +213,20 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     jvm = df.sparkSession._jvm
     jmode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return qe.explainString(jmode)
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Generated classes Janino has compiled in this JVM, and their total
+    compile time in ms, since the JVM started.  The count is
+    ``CodegenMetrics.METRIC_COMPILATION_TIME``'s; a class served from
+    Spark's codegen cache is not compiled and not counted.  In local
+    mode executors share the driver JVM, so their compiles count too.
+    Take the difference of two reads to count one stretch of work."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    count = metrics.METRIC_COMPILATION_TIME().getCount()
+    return int(count), codegen.compileTime() / 1e6  # compileTime is in ns
 
 
 def operators_in_plan(df: DataFrame) -> list[str]:

@@ -16,6 +16,14 @@ configuration; the settings below are the 100 TB-posture defaults:
   reference's Arrow FFI boundary)
 - session timezone pinned to UTC (reference carries an explicit
   timezone in every temporal expression, expr.proto:374-396)
+- a generated-class cache sized to the engine's working set, and
+  generated class names without the codegen stage id, so each codegen
+  class is compiled once per JVM rather than on every execution
+  (``plans.codegen_compiles`` counts the compiles)
+
+Static confs, the codegen cache size among them, take effect only when
+``get_session`` builds the session; a session that already exists
+keeps its own.
 """
 
 from __future__ import annotations
@@ -59,6 +67,25 @@ DEFAULT_CONF: dict[str, str] = {
     # TimestampType in Spark; read them as raw nanosecond longs and let the
     # catalog normalize to microsecond timestamps (catalog.load_table).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # --- codegen -----------------------------------------------------------
+    # Spark's generated-class cache (static; default 100 entries) is
+    # smaller than the ~450 classes the 29 bench queries compile, so
+    # every execution recompiled its classes.  Sized at 2x that working
+    # set.  Measured (dev/codegen_cache_probe.py: the bench queries
+    # cycled 3x at sf0.01 in one local[4] session): classes compiled
+    # per cycle 461/453/453 at 100 entries, 439/0/0 at 1000; third
+    # cycle 13.4 -> 10.6 s wall; Metaspace after it 176 -> 169 MB.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # The cache is keyed by generated source, and by default a class's
+    # name carries its whole-stage codegen stage id.  AQE numbers stages
+    # in the order they are planned, which follows the order shuffle
+    # stages finish, so the same code can come back under another id
+    # and compile again.  Without the id (explain still prints
+    # "*(id)"), the four star_interactive queries cycled 8x in one
+    # local[4] session at sf0.001 compile 95 classes once and 0 in all
+    # 28 later cycles (4 sessions); with it, 111 and then 4 more in 3
+    # of 14 later cycles (2 sessions).
+    "spark.sql.codegen.useIdInClassName": "false",
     # --- misc --------------------------------------------------------------
     "spark.ui.enabled": "false",
 }

@@ -32,6 +32,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
+    from datafusion_comet_spark.plans import plan_string
     from datafusion_comet_spark.queries import load_all
     from datafusion_comet_spark.session import get_session
 
@@ -45,9 +46,7 @@ def main() -> None:
     for name in names:
         df = registry[name].fn(spark, sf_dir)
         df.collect()  # finalize the adaptive plan before explaining
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        txt = plan_string(df)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(txt)

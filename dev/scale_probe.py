@@ -19,9 +19,14 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from datafusion_comet_spark.plans import operators_in_plan, shuffle_count  # noqa: E402
+from datafusion_comet_spark.queries import load_all  # noqa: E402
+from datafusion_comet_spark.session import get_session  # noqa: E402
 
 QUERIES = [
     "q1_pricing_summary",
@@ -39,32 +44,24 @@ QUERIES = [
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 
 
-def probe(plan: str) -> str:
-    bhj = plan.count("BroadcastHashJoin")
-    smj = plan.count("SortMergeJoin")
-    shj = plan.count("ShuffledHashJoin")
-    bnl = plan.count("BroadcastNestedLoopJoin")
-    exch = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    parts = []
-    if bhj:
-        parts.append(f"{bhj}×BHJ")
-    if smj:
-        parts.append(f"{smj}×SMJ")
-    if shj:
-        parts.append(f"{shj}×SHJ")
-    if bnl:
-        parts.append(f"{bnl}×BNLJ")
-    parts.append(f"{exch}ex")
+JOINS = [
+    ("BroadcastHashJoin", "BHJ"),
+    ("SortMergeJoin", "SMJ"),
+    ("ShuffledHashJoin", "SHJ"),
+    ("BroadcastNestedLoopJoin", "BNLJ"),
+]
+
+
+def probe(df) -> str:
+    """Join operators and hash/range exchanges in ``df``'s static plan,
+    counted on the walked executed plan."""
+    ops = Counter(operators_in_plan(df))
+    parts = [f"{ops[op]}×{tag}" for op, tag in JOINS if ops[op]]
+    parts.append(f"{shuffle_count(df)}ex")
     return " ".join(parts)
 
 
 def main() -> None:
-    from datafusion_comet_spark.plans.introspect import plan_string
-    from datafusion_comet_spark.queries import load_all
-    from datafusion_comet_spark.session import get_session
-
     spark = get_session(app_name="dcs-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
@@ -73,7 +70,7 @@ def main() -> None:
         cells = []
         for sf in SFS:
             df = registry[name].fn(spark, f"/root/testdata/{sf}")
-            cells.append(probe(plan_string(df, "simple")))
+            cells.append(probe(df))
         rows.append((name, cells))
     print("| query | " + " | ".join(SFS) + " |")
     print("|---|" + "---|" * len(SFS))
@@ -103,7 +100,7 @@ def main() -> None:
         print("|---|---|")
         for name in QUERIES:
             df = registry[name].fn(spark, "/root/testdata/sf0.1")
-            print(f"| {name} | {probe(plan_string(df, 'simple'))} |")
+            print(f"| {name} | {probe(df)} |")
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
